@@ -7,8 +7,9 @@ different parallelism could serialize spans differently. This module
 implements the classic recipe the north_star prescribes:
 
   1. axis-aligned boxes from the 4-point quads the OCR shape carries
-     (``ocr-containers/paddle-ocr/inference.py:109-115``; min/max corner fold,
-     same as the UI's ``getBoundingBox`` at ``web/src/pages/OCRResult.tsx:95-108``)
+     (``ocr-containers/paddle-ocr/inference.py:109-115``), folded JVM-side
+     in ``_clean`` by min/max corner, same as the UI's ``getBoundingBox``
+     at ``web/src/pages/OCRResult.tsx:95-108``
   2. recursive XY-cut block segmentation (Nagy-style projection-profile
      splitting on whitespace valleys) — SURVEY.md §2 P5
   3. line clustering inside each block by vertical-overlap ≥ 0.5 of the
@@ -17,15 +18,19 @@ implements the classic recipe the north_star prescribes:
      ties broken by the producer's ``word_seq`` so the order is total and
      deterministic.
 
-Everything is NumPy inside ``applyInPandas`` grouped by ``(doc_id, page)`` —
-pages are independent reading units (the reference also processes per page,
-``ocr.py:157-175``), so a pathological mega-document parallelizes across its
-pages instead of stalling one task (skew policy, SURVEY.md §4 item 1). The
-only full-document operation is the global offset window (SURVEY.md §2 W1),
-a single range shuffle on ``doc_id``.
+The page algorithm (``page_reading_order``) is plain Python, one path for
+every page size. The Spark path is ONE ``repartition(doc_id)`` +
+``sortWithinPartitions`` exchange, then a single ``mapInArrow`` pass whose
+partitions hold complete documents: one shared page loop orders every page
+and assigns global offsets (SURVEY.md §2 W1) in-pass — no window, no second
+shuffle. Pages are independent reading units (the reference also processes
+per page, ``ocr.py:157-175``); ``order_words_paged`` is the page-parallel
+route for unbounded single documents (skew policy, SURVEY.md §4 item 1).
 """
 
 from __future__ import annotations
+
+from bisect import bisect_right
 
 import numpy as np
 import pandas as pd
@@ -42,124 +47,29 @@ LINE_OVERLAP = 0.5  # same line iff vertical overlap ≥ 0.5 * min(heights)
 
 
 # ----------------------------------------------------------------------
-# pure-NumPy core (unit-testable without Spark)
+# page algorithm (pure Python, unit-testable without Spark)
 # ----------------------------------------------------------------------
-def boxes_from_points(points: np.ndarray) -> np.ndarray:
-    """(n, 4, 2) corner quads → (n, 4) [x0, y0, x1, y1]."""
-    pts = np.asarray(points, dtype=np.float64)
-    if pts.size == 0:
-        return np.zeros((0, 4))
-    x0 = pts[:, :, 0].min(axis=1)
-    x1 = pts[:, :, 0].max(axis=1)
-    y0 = pts[:, :, 1].min(axis=1)
-    y1 = pts[:, :, 1].max(axis=1)
-    return np.stack([x0, y0, x1, y1], axis=1)
+def page_reading_order(
+    boxes: np.ndarray, tiebreak: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Full per-page ordering of ``(n, 4)`` ``[x0, y0, x1, y1]`` boxes.
 
+    Returns (perm, block_id, line_id) where ``perm`` lists word indices in
+    reading order, and block/line ids are aligned with the *input* order.
+    ``perm`` is a permutation of ``range(n)`` for any float input, NaN and
+    ±inf included.
 
-def _projection_gaps(lo: np.ndarray, hi: np.ndarray, min_gap: float) -> list[float]:
-    """Midpoints of whitespace gaps ≥ min_gap in the 1-D projection of
-    [lo, hi] intervals. Sorted ascending — deterministic."""
-    order = np.argsort(lo, kind="stable")
-    lo, hi = lo[order], hi[order]
-    if len(lo) < 2:
-        return []
-    # r6: vectorized — cover_end before element i is the running max of
-    # hi[0..i-1] (float max is exact, so this is bit-identical to the
-    # former per-element loop; this function is called twice per xy_cut
-    # region and dominated the recursion's profile)
-    cover = np.maximum.accumulate(hi)[:-1]
-    mask = (lo[1:] - cover) >= min_gap
-    return ((lo[1:][mask] + cover[mask]) / 2.0).tolist()
-
-
-def xy_cut(
-    boxes: np.ndarray, y_gap: float, x_gap: float, min_x_extent: float = 0.0
-) -> list[np.ndarray]:
-    """Recursive XY-cut. Returns index groups (blocks) in reading order:
-    horizontal cuts top-to-bottom first, then vertical cuts left-to-right.
-
-    Trying y before x at every level makes a spanning header split off
-    before the column cut beneath it — the standard top-down variant.
-    ``min_x_extent`` guards single text lines from being cut at inter-word
-    gaps: a region is only a column-split candidate if its vertical extent
-    exceeds it (a one-line region is always a leaf after y-cuts fail).
+    Plain Python floats throughout: ``.tolist()`` gives the same IEEE
+    doubles, and pages of tens to hundreds of words would otherwise pay
+    ~100 µs of per-tiny-array NumPy dispatch. Cut assignment is a bisection,
+    so pages of 10^5 words stay near-linear.
     """
     n = len(boxes)
     if n == 0:
-        return []
-
-    def rec(idx: np.ndarray) -> list[np.ndarray]:
-        if len(idx) <= 1:
-            return [idx]
-        b = boxes[idx]
-        cuts = _projection_gaps(b[:, 1], b[:, 3], y_gap)
-        axis = 1  # y
-        if not cuts and (b[:, 3].max() - b[:, 1].min()) > min_x_extent:
-            cuts = _projection_gaps(b[:, 0], b[:, 2], x_gap)
-            axis = 0  # x
-        if not cuts:
-            return [idx]
-        centers = (b[:, axis] + b[:, axis + 2]) / 2.0
-        bounds = [-np.inf] + cuts + [np.inf]
-        out: list[np.ndarray] = []
-        for k in range(len(bounds) - 1):
-            mask = (centers >= bounds[k]) & (centers < bounds[k + 1])
-            if mask.any():
-                out.extend(rec(idx[mask]))
-        return out
-
-    return rec(np.arange(n))
-
-
-def cluster_lines(boxes: np.ndarray) -> np.ndarray:
-    """Line ids (0..k-1 top-to-bottom) for boxes within one block.
-
-    Greedy sweep over boxes sorted by y-center: a box joins the current line
-    iff its vertical overlap with the line's running band is ≥ LINE_OVERLAP of
-    the smaller height; otherwise it starts a new line.
-    """
-    n = len(boxes)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    yc = (boxes[:, 1] + boxes[:, 3]) / 2.0
-    order = np.argsort(yc, kind="stable")
-    # r6: the sweep runs on plain Python floats — per-element numpy scalar
-    # indexing boxed ~1.3M np.float64s per 5k pages and dominated the
-    # kernel profile; .tolist() floats are the same IEEE doubles, and
-    # min/max/± on them is the identical arithmetic (verified equal)
-    y0s = boxes[:, 1].tolist()
-    y1s = boxes[:, 3].tolist()
-    line_ids = [0] * n
-    cur = 0
-    ordl = order.tolist()
-    j0 = ordl[0]
-    band_y0, band_y1 = y0s[j0], y1s[j0]
-    for j in ordl[1:]:
-        y0, y1 = y0s[j], y1s[j]
-        overlap = min(band_y1, y1) - max(band_y0, y0)
-        min_h = max(min(band_y1 - band_y0, y1 - y0), 1e-9)
-        if overlap >= LINE_OVERLAP * min_h:
-            band_y0 = min(band_y0, y0)
-            band_y1 = max(band_y1, y1)
-        else:
-            cur += 1
-            band_y0, band_y1 = y0, y1
-        line_ids[j] = cur
-    return np.array(line_ids, dtype=np.int64)
-
-
-def _page_reading_order_py(
-    x0: list, y0: list, x1: list, y1: list, tb: list
-) -> tuple[list, list, list]:
-    """Pure-Python twin of :func:`page_reading_order` for typical pages.
-
-    Bit-identical by construction: ``.tolist()`` floats are the same IEEE
-    doubles and every comparison/±/÷ mirrors the numpy path — but small
-    pages (tens to hundreds of words) pay ~100 µs of per-tiny-array numpy
-    dispatch in the array path, which dominated the span-kernel profile
-    at 100 µs/doc. Returns (perm, block_id, line_id) as lists.
-    """
-    n = len(x0)
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z
+    x0, y0, x1, y1 = np.asarray(boxes).T.tolist()
+    tb = list(range(n)) if tiebreak is None else np.asarray(tiebreak).tolist()
     heights = sorted(y1[i] - y0[i] for i in range(n))
     mid = n // 2
     med_h = heights[mid] if n % 2 else (heights[mid - 1] + heights[mid]) / 2.0
@@ -169,7 +79,9 @@ def _page_reading_order_py(
     min_x_extent = X_MIN_EXTENT * med_h
 
     def gaps_of(idx, lo, hi, min_gap):
-        order = sorted(idx, key=lo.__getitem__)  # stable, same as argsort
+        """Midpoints of whitespace gaps ≥ min_gap in the 1-D projection of
+        the [lo, hi] intervals, ascending (stable sort: deterministic)."""
+        order = sorted(idx, key=lo.__getitem__)
         out = []
         cover_end = hi[order[0]]
         for j in order[1:]:
@@ -182,6 +94,12 @@ def _page_reading_order_py(
         return out
 
     def rec(idx):
+        """Recursive XY-cut → index groups (blocks) in reading order.
+
+        Horizontal cuts are tried first at every level, so a spanning header
+        splits off before the column cut beneath it. A region is only a
+        column-split candidate if it is taller than ``min_x_extent``, so a
+        single text line is never cut at its inter-word gaps."""
         if len(idx) <= 1:
             return [idx]
         cuts = gaps_of(idx, y0, y1, y_gap)
@@ -193,30 +111,29 @@ def _page_reading_order_py(
             lo, hi = x0, x1
         if not cuts:
             return [idx]
-        bounds = cuts + [float("inf")]
-        nseg = len(bounds)
-        segs = [[] for _ in range(nseg)]
+        segs = [[] for _ in range(len(cuts) + 1)]
         for j in idx:
-            c = (lo[j] + hi[j]) / 2.0
-            # linear scan: cut counts are tiny, and this mirrors the
-            # numpy masks exactly (first bound with c < bound wins)
-            for k in range(nseg):
-                if c < bounds[k]:
-                    segs[k].append(j)
-                    break
+            # segment k holds centers in [cuts[k-1], cuts[k]); a center no
+            # cut lies above (+inf, NaN) goes to the last segment
+            segs[bisect_right(cuts, (lo[j] + hi[j]) / 2.0)].append(j)
+        segs = [s for s in segs if s]
+        if len(segs) == 1:
+            # no cut separated the words (only non-finite or inverted boxes
+            # get here): the region is a leaf, not an endless recursion
+            return [idx]
         out = []
         for sub in segs:
-            if sub:
-                out.extend(rec(sub))
+            out.extend(rec(sub))
         return out
 
-    blocks = rec(list(range(n)))
     block_id = [0] * n
     line_id = [0] * n
     perm: list = []
-    for b_i, idx in enumerate(blocks):
+    for b_i, idx in enumerate(rec(list(range(n)))):
         m = len(idx)
-        # greedy line sweep — same arithmetic as cluster_lines
+        # greedy line sweep over the block's boxes by y-center: a box joins
+        # the current line iff its vertical overlap with the line's running
+        # band is ≥ LINE_OVERLAP of the smaller height
         yc = [(y0[j] + y1[j]) / 2.0 for j in idx]
         order = sorted(range(m), key=yc.__getitem__)
         lines = [0] * m
@@ -249,72 +166,17 @@ def _page_reading_order_py(
         for b_j, ln in zip(idx, lines):
             block_id[b_j] = b_i
             line_id[b_j] = ln
-        # tuple sort ≡ np.lexsort((tb, x0, lines)): ties beyond the three
-        # keys fall back to the within-block position k, which is exactly
-        # lexsort's stability
+        # order within block: (line, x0, tiebreak), then the within-block
+        # position k — total and deterministic
         keyed = sorted(
             zip(lines, (x0[j] for j in idx), (tb[j] for j in idx), range(m))
         )
         perm.extend(idx[t[3]] for t in keyed)
-    return perm, block_id, line_id
-
-
-def page_reading_order(
-    boxes: np.ndarray, tiebreak: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full per-page ordering.
-
-    Returns (perm, block_id, line_id) where ``perm`` lists word indices in
-    reading order, and block/line ids are aligned with the *input* order.
-    """
-    n = len(boxes)
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z
-    if tiebreak is None:
-        tiebreak = np.arange(n)
-    if n <= 4096:
-        # typical pages: the pure-Python twin (identical arithmetic, see
-        # its docstring) avoids per-tiny-array numpy dispatch overhead
-        p, b, ln = _page_reading_order_py(
-            boxes[:, 0].tolist(),
-            boxes[:, 1].tolist(),
-            boxes[:, 2].tolist(),
-            boxes[:, 3].tolist(),
-            np.asarray(tiebreak).tolist(),
-        )
-        return (
-            np.array(p, dtype=np.int64),
-            np.array(b, dtype=np.int64),
-            np.array(ln, dtype=np.int64),
-        )
-    heights = np.sort(boxes[:, 3] - boxes[:, 1])
-    # direct middle pick ≡ np.median (even n: (a+b)/2 is exactly what
-    # np.mean of the two middles computes) without its ~15 µs of wrapper
-    # overhead per page
-    mid = n // 2
-    med_h = (
-        float(heights[mid])
-        if n % 2
-        else float((heights[mid - 1] + heights[mid]) / 2.0)
+    return (
+        np.array(perm, dtype=np.int64),
+        np.array(block_id, dtype=np.int64),
+        np.array(line_id, dtype=np.int64),
     )
-    med_h = max(med_h, 1e-9)
-    blocks = xy_cut(
-        boxes, Y_GAP_FACTOR * med_h, X_GAP_FACTOR * med_h, X_MIN_EXTENT * med_h
-    )
-
-    block_id = np.zeros(n, dtype=np.int64)
-    line_id = np.zeros(n, dtype=np.int64)
-    perm_parts: list[np.ndarray] = []
-    for b_i, idx in enumerate(blocks):
-        block_id[idx] = b_i
-        lines = cluster_lines(boxes[idx])
-        line_id[idx] = lines
-        # order within block: (line, x0, tiebreak) — total and deterministic
-        key = np.lexsort((tiebreak[idx], boxes[idx, 0], lines))
-        perm_parts.append(idx[key])
-    perm = np.concatenate(perm_parts) if perm_parts else np.zeros(0, dtype=np.int64)
-    return perm, block_id, line_id
 
 
 # ----------------------------------------------------------------------
@@ -332,6 +194,12 @@ ORDERED_SCHEMA = (
     "doc_id string, page int, seq int, kind string, content string, "
     "media_ref string, rec_score double, x0 double, y0 double, "
     "x1 double, y1 double, block_id int, line_id int, word_id int"
+)
+
+#: canonical output of the fused direct path
+SPANS_TABLE_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string, text:string, "
+    "media_ref:string, offset:int>>"
 )
 
 
@@ -405,98 +273,16 @@ def _clean(ocr_words: DataFrame) -> DataFrame:
     return out
 
 
-_COLS = [
-    "doc_id", "page", "word_seq", "kind", "content", "media_ref",
-    "rec_score", "x0", "y0", "x1", "y1",
-]
+def _page_order(tbl):
+    """The page loop both Arrow kernels share, over a chunk of COMPLETE
+    documents sorted by (doc_id, page, word_seq).
 
-
-def _order_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Reading-order a chunk of COMPLETE documents (sorted by doc_id, page,
-    word_seq). One vectorized output construction for the whole chunk; the
-    per-page ``page_reading_order`` calls are the only Python-level loop."""
-    n = len(pdf)
-    ids = pdf["doc_id"].to_numpy(dtype=object)
-    pages = pdf["page"].to_numpy()
-    seqs = pdf["word_seq"].to_numpy()
-    boxes = np.stack(
-        [pdf["x0"].to_numpy(), pdf["y0"].to_numpy(), pdf["x1"].to_numpy(), pdf["y1"].to_numpy()],
-        axis=1,
-    )
-    # (doc, page) group boundaries in one pass
-    changed = np.flatnonzero((ids[1:] != ids[:-1]) | (pages[1:] != pages[:-1])) + 1
-    starts = np.concatenate(([0], changed))
-    ends = np.concatenate((changed, [n]))
-    doc_start = np.concatenate(([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
-
-    perm = np.empty(n, dtype=np.int64)
-    block_id = np.empty(n, dtype=np.int32)
-    line_id = np.empty(n, dtype=np.int32)
-    seq_out = np.empty(n, dtype=np.int32)
-    word_id = np.empty(n, dtype=np.int32)
-    doc_starts = set(doc_start.tolist())
-    base = 0  # global word_id base within the current doc
-    for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
-        p, b, l = page_reading_order(boxes[lo:hi], tiebreak=seqs[lo:hi])
-        perm[lo:hi] = p + lo
-        block_id[lo:hi] = b[p]
-        line_id[lo:hi] = l[p]
-        seq_out[lo:hi] = np.arange(hi - lo, dtype=np.int32)
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
-
-    return pd.DataFrame(
-        {
-            "doc_id": ids[perm],
-            "page": pages[perm].astype("int32"),
-            "seq": seq_out,
-            "kind": pdf["kind"].to_numpy()[perm],
-            "content": pdf["content"].to_numpy()[perm],
-            "media_ref": pdf["media_ref"].to_numpy()[perm],
-            "rec_score": pdf["rec_score"].to_numpy()[perm],
-            "x0": boxes[perm, 0],
-            "y0": boxes[perm, 1],
-            "x1": boxes[perm, 2],
-            "y1": boxes[perm, 3],
-            "block_id": block_id,
-            "line_id": line_id,
-            "word_id": word_id,
-        }
-    )
-
-
-def _order_partition(batches):
-    """mapInPandas kernel: a partition holds complete documents (rows
-    repartitioned by doc_id and sorted by (doc_id, page, word_seq)); Arrow
-    batches may split a document, so buffer the tail until the doc_id
-    changes. One Python call per partition, not per group."""
-    leftover: pd.DataFrame | None = None
-    for pdf in batches:
-        if leftover is not None:
-            pdf = pd.concat([leftover, pdf], ignore_index=True)
-            leftover = None
-        if len(pdf) == 0:
-            continue
-        ids = pdf["doc_id"].to_numpy(dtype=object)
-        # last complete doc boundary; hold the final doc (may continue)
-        tail_mask = ids != ids[-1]
-        cut = int(np.flatnonzero(tail_mask).max() + 1) if tail_mask.any() else 0
-        if cut > 0:
-            yield _order_chunk(pdf.iloc[:cut])
-        leftover = pdf.iloc[cut:].reset_index(drop=True)
-    if leftover is not None and len(leftover):
-        yield _order_chunk(leftover)
-
-
-def _order_chunk_arrow(tbl):
-    """Arrow-native variant of ``_order_chunk``: geometry/ids come out as
-    zero-copy numpy; string columns (doc_id/content/...) are never
-    materialized as Python objects — group boundaries are computed with
-    pyarrow compute and the final reorder is a C++ ``take``. This keeps the
-    Python side allocation-free, which is what lets 32 concurrent workers
-    scale instead of saturating the allocator/memory bus."""
-    import pyarrow as pa
+    Detects doc and page boundaries and reading-orders every page once.
+    Returns ``(perm, block_id, line_id, seq, word_id, doc_bounds)``: the
+    chunk-wide row permutation, per-output-row block/line ids, the position
+    within the page, the global offset within the document, and the row
+    bounds of each document (before and after ``perm``, which never moves a
+    row across a page)."""
     import pyarrow.compute as pc
 
     n = tbl.num_rows
@@ -512,23 +298,24 @@ def _order_chunk_arrow(tbl):
         )
     ) + 1
     page_change = np.flatnonzero(pages[1:] != pages[:-1]) + 1
-    changed = np.union1d(id_change, page_change)
-    starts = np.concatenate(([0], changed))
-    ends = np.concatenate((changed, [n]))
-    doc_starts = set(np.concatenate(([0], id_change)).tolist())
+    starts = np.concatenate(([0], np.union1d(id_change, page_change)))
+    ends = np.concatenate((starts[1:], [n]))
+    doc_bounds = np.concatenate(([0], id_change, [n]))
 
     perm = np.empty(n, dtype=np.int64)
     block_id = np.empty(n, dtype=np.int32)
     line_id = np.empty(n, dtype=np.int32)
-    seq_out = np.empty(n, dtype=np.int32)
-    word_id = np.empty(n, dtype=np.int32)
-    base = 0
-    # per-chunk geometry memo — see _spans_chunk_arrow: pure-function CSE
-    # for templated corpora, no state beyond this call
+    # Geometry memo: reading order is a pure function of (boxes, tiebreak),
+    # and templated corpora (forms, rendered grids) repeat page layouts
+    # verbatim, so identical bytes reuse the permutation. The dict lives for
+    # this call only (common-subexpression elimination, not a cache across
+    # tasks or runs); diverse layouts pay ~1 µs/page of hashing and miss.
+    # Bound: a chunk is at most one Arrow batch (ARROW_MAX_RECORDS_PER_BATCH
+    # rows) plus one carried-over document, and each page adds at most one
+    # key, so the keys never hold more bytes than the chunk's own geometry
+    # (36 a row) and the values no more than three int64s a row.
     memo: dict = {}
-    for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
+    for lo, hi in zip(starts.tolist(), ends.tolist()):
         sub = boxes[lo:hi]
         tb = seqs[lo:hi]
         key = (sub.tobytes(), tb.tobytes())
@@ -542,15 +329,26 @@ def _order_chunk_arrow(tbl):
         perm[lo:hi] = p + lo
         block_id[lo:hi] = bp
         line_id[lo:hi] = lp
-        seq_out[lo:hi] = np.arange(hi - lo, dtype=np.int32)
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
+    rows = np.arange(n, dtype=np.int32)
+    seq = rows - np.repeat(starts, ends - starts).astype(np.int32)
+    word_id = rows - np.repeat(doc_bounds[:-1], np.diff(doc_bounds)).astype(np.int32)
+    return perm, block_id, line_id, seq, word_id, doc_bounds
 
+
+def _order_chunk_arrow(tbl):
+    """Chunk of complete documents → reading-ordered word rows
+    (``ORDERED_SCHEMA``). Geometry and ids come out as zero-copy numpy;
+    string columns are never materialized as Python objects — the reorder
+    is a C++ ``take``, so the Python side stays allocation-free."""
+    import pyarrow as pa
+
+    perm, block_id, line_id, seq, word_id, _ = _page_order(tbl)
     taken = tbl.take(pa.array(perm))
     return pa.table(
         {
             "doc_id": taken.column("doc_id"),
             "page": taken.column("page"),
-            "seq": pa.array(seq_out, type=pa.int32()),
+            "seq": pa.array(seq, type=pa.int32()),
             "kind": taken.column("kind"),
             "content": taken.column("content"),
             "media_ref": taken.column("media_ref"),
@@ -566,9 +364,39 @@ def _order_chunk_arrow(tbl):
     )
 
 
-def _order_partition_arrow(batches):
-    """mapInArrow kernel with the same doc-boundary buffering contract as
-    ``_order_partition``, minus any pandas/PyObject materialization."""
+def _spans_chunk_arrow(tbl):
+    """Chunk of complete documents → one row per doc with the assembled
+    span array (``SPANS_TABLE_SCHEMA``). All array building is pyarrow C++."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    perm, _, _, _, word_id, doc_bounds = _page_order(tbl)
+    taken = tbl.take(pa.array(perm))
+    kind = taken.column("kind").combine_chunks()
+    is_text = pc.equal(kind, "text")
+    struct = pa.StructArray.from_arrays(
+        [
+            kind,
+            pc.if_else(is_text, taken.column("content").combine_chunks(),
+                       pa.scalar(None, pa.string())),
+            pc.if_else(is_text, pa.scalar(None, pa.string()),
+                       taken.column("media_ref").combine_chunks()),
+            pa.array(word_id, type=pa.int32()),
+        ],
+        names=["kind", "text", "media_ref", "offset"],
+    )
+    spans = pa.ListArray.from_arrays(
+        pa.array(doc_bounds, type=pa.int32()), struct
+    )
+    doc_ids = tbl.column("doc_id").take(pa.array(doc_bounds[:-1]))
+    return pa.table({"doc_id": doc_ids, "spans": spans})
+
+
+def _complete_docs(batches, build):
+    """mapInArrow driver: a partition holds complete documents sorted by
+    (doc_id, page, word_seq), but an Arrow batch may end mid-document, so
+    the last document is carried into the next batch until its doc_id
+    changes. Every complete-document chunk goes through ``build`` once."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -582,45 +410,60 @@ def _order_partition_arrow(batches):
         if n == 0:
             continue
         ids = tbl.column("doc_id")
-        last = ids.slice(n - 1, 1)
         not_last = np.invert(
-            pc.equal(ids, last[0]).to_numpy(zero_copy_only=False)
+            pc.equal(ids, ids.slice(n - 1, 1)[0]).to_numpy(zero_copy_only=False)
         )
         cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
         if cut > 0:
-            for out_batch in _order_chunk_arrow(tbl.slice(0, cut)).to_batches():
-                yield out_batch
+            yield from build(tbl.slice(0, cut)).to_batches()
         leftover = tbl.slice(cut)
     if leftover is not None and leftover.num_rows:
-        for out_batch in _order_chunk_arrow(leftover.combine_chunks()).to_batches():
-            yield out_batch
+        yield from build(leftover.combine_chunks()).to_batches()
 
 
-def order_words(ocr_words: DataFrame, partitions: int | None = None) -> DataFrame:
+# named mapInArrow entry points, so plans and Python-worker metrics say
+# which output the pass builds
+def _order_partition_arrow(batches):
+    return _complete_docs(batches, _order_chunk_arrow)
+
+
+def _spans_partition_arrow(batches):
+    return _complete_docs(batches, _spans_chunk_arrow)
+
+
+def _by_doc(ocr_words: DataFrame) -> DataFrame:
+    """The one exchange of every single-pass path: ``_clean``, hash
+    ``repartition`` on doc_id (so a partition holds complete documents),
+    then ``sortWithinPartitions(doc_id, page, word_seq)``. The partition
+    count is always ``spark.sql.shuffle.partitions``, which is what lets an
+    upstream ``repartition(n, doc_id)`` satisfy it with no second exchange."""
+    n_part = int(ocr_words.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        _clean(ocr_words)
+        .repartition(n_part, "doc_id")
+        .sortWithinPartitions("doc_id", "page", "word_seq")
+    )
+
+
+def order_words(ocr_words: DataFrame) -> DataFrame:
     """``ocr_words(doc_id, page, word_seq, content, rec_score, points[, kind,
     media_ref])`` → reading-ordered words with global ``word_id`` (the
     ``offset`` of the target schema — SURVEY.md §2 W1, replacing the
     reference's O(n²) re-match at ``ocr.py:311-322``).
 
-    Scale shape — exactly ONE shuffle: ``repartition(doc_id)`` +
-    ``sortWithinPartitions(doc_id, page, word_seq)`` co-locates and orders
-    each document, then a single ``mapInPandas`` pass assigns reading order
+    Scale shape — exactly ONE shuffle (``_by_doc``) co-locates and orders
+    each document, then a single ``mapInArrow`` pass assigns reading order
     AND global offsets per document (no window, no second shuffle). Box
     folding and the empty-word filter run JVM-side before the exchange.
 
     Skew: hash repartition balances documents across tasks; a pathological
     mega-document is bounded by the ingest page cap (the reference enforces
-    ≤10 pages/doc, ``pdf.py:122-124``) and NumPy handles 10^5-word documents
-    in-memory comfortably. For corpora with unbounded single documents use
+    ≤10 pages/doc, ``pdf.py:122-124``) and the kernel handles 10^5-word
+    pages in-memory. For corpora with unbounded single documents use
     ``order_words_paged`` (page-parallel variant) below.
     """
-    cleaned = _clean(ocr_words)
-    spark = ocr_words.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        cleaned.repartition(n_part, "doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-        .mapInArrow(_order_partition_arrow, schema=ORDERED_SCHEMA)
+    return _by_doc(ocr_words).mapInArrow(
+        _order_partition_arrow, schema=ORDERED_SCHEMA
     )
 
 
@@ -643,14 +486,7 @@ def order_words_auto(
     exchange (Spark plans the second read as a ReusedExchange), so the
     source parquet is scanned once however many branches fire.
     """
-    spark = ocr_words.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    shuffled = (
-        _clean(ocr_words)
-        .repartition(n_part, "doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-    )
-    tagged = shuffled.withColumn(
+    tagged = _by_doc(ocr_words).withColumn(
         "__doc_n", F.count("*").over(Window.partitionBy("doc_id"))
     )
     normal = (
@@ -680,116 +516,7 @@ def order_words_paged(ocr_words: DataFrame, _pre_cleaned: bool = False) -> DataF
     return laid_out.withColumn("word_id", (F.row_number().over(w) - 1).cast("int"))
 
 
-#: canonical output of the fused direct path
-SPANS_TABLE_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string, text:string, "
-    "media_ref:string, offset:int>>"
-)
-
-
-def _spans_chunk_arrow(tbl):
-    """Chunk of COMPLETE docs (sorted by doc, page, word_seq) → one row per
-    doc with the assembled span array. All array building is pyarrow C++."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = tbl.num_rows
-    pages = tbl.column("page").to_numpy()
-    seqs = tbl.column("word_seq").to_numpy()
-    boxes = np.stack(
-        [tbl.column(c).to_numpy() for c in ("x0", "y0", "x1", "y1")], axis=1
-    )
-    ids = tbl.column("doc_id")
-    id_change = np.flatnonzero(
-        np.invert(
-            pc.equal(ids.slice(1), ids.slice(0, n - 1)).to_numpy(zero_copy_only=False)
-        )
-    ) + 1
-    page_change = np.flatnonzero(pages[1:] != pages[:-1]) + 1
-    changed = np.union1d(id_change, page_change)
-    starts = np.concatenate(([0], changed))
-    ends = np.concatenate((changed, [n]))
-    doc_bounds = np.concatenate(([0], id_change, [n]))
-
-    perm = np.empty(n, dtype=np.int64)
-    word_id = np.empty(n, dtype=np.int32)
-    doc_starts = set(doc_bounds[:-1].tolist())
-    base = 0
-    # Per-CHUNK memo on the page's exact geometry bytes: templated corpora
-    # (forms, rendered grids) repeat page layouts verbatim, and reading
-    # order is a pure function of (boxes, tiebreak) — identical bytes ⇒
-    # identical permutation. The dict lives only for this chunk call (no
-    # module/worker state, nothing persists across tasks or runs; a fresh
-    # bench invocation recomputes everything), so this is common-
-    # subexpression elimination, not result caching. Diverse-layout
-    # corpora pay ~1 µs/page of hashing and miss.
-    memo: dict = {}
-    for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
-        sub = boxes[lo:hi]
-        tb = seqs[lo:hi]
-        key = (sub.tobytes(), tb.tobytes())
-        p = memo.get(key)
-        if p is None:
-            p, _, _ = page_reading_order(sub, tiebreak=tb)
-            if len(memo) >= 8192:
-                memo.clear()
-            memo[key] = p
-        perm[lo:hi] = p + lo
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
-
-    taken = tbl.take(pa.array(perm))
-    kind = taken.column("kind").combine_chunks()
-    is_text = pc.equal(kind, "text")
-    struct = pa.StructArray.from_arrays(
-        [
-            kind,
-            pc.if_else(is_text, taken.column("content").combine_chunks(),
-                       pa.scalar(None, pa.string())),
-            pc.if_else(is_text, pa.scalar(None, pa.string()),
-                       taken.column("media_ref").combine_chunks()),
-            pa.array(word_id, type=pa.int32()),
-        ],
-        names=["kind", "text", "media_ref", "offset"],
-    )
-    spans = pa.ListArray.from_arrays(
-        pa.array(doc_bounds, type=pa.int32()), struct
-    )
-    doc_ids = ids.take(pa.array(doc_bounds[:-1]))
-    return pa.table({"doc_id": doc_ids, "spans": spans})
-
-
-def _spans_partition_arrow(batches):
-    """mapInArrow kernel: complete documents per partition → span table rows.
-    Same doc-boundary buffering as ``_order_partition_arrow``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    leftover = None
-    for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        if leftover is not None:
-            tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
-            leftover = None
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        ids = tbl.column("doc_id")
-        not_last = np.invert(
-            pc.equal(ids, ids.slice(n - 1, 1)[0]).to_numpy(zero_copy_only=False)
-        )
-        cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
-        if cut > 0:
-            for out in _spans_chunk_arrow(tbl.slice(0, cut)).to_batches():
-                yield out
-        leftover = tbl.slice(cut)
-    if leftover is not None and leftover.num_rows:
-        for out in _spans_chunk_arrow(leftover.combine_chunks()).to_batches():
-            yield out
-
-
-def spans_table(ocr_words: DataFrame, partitions: int | None = None) -> DataFrame:
+def spans_table(ocr_words: DataFrame) -> DataFrame:
     """Fused fast path: ``ocr_words`` → canonical ``documents(doc_id, spans)``
     in ONE shuffle and ONE Python pass — reading order, global offsets AND
     span assembly happen inside the kernel, so there is no downstream
@@ -799,13 +526,8 @@ def spans_table(ocr_words: DataFrame, partitions: int | None = None) -> DataFram
     Semantically identical to ``assemble_spans(order_words(df))`` (tested);
     prefer this form in pipelines that don't also need the word-level table.
     """
-    cleaned = _clean(ocr_words)
-    spark = ocr_words.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        cleaned.repartition(n_part, "doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-        .mapInArrow(_spans_partition_arrow, schema=SPANS_TABLE_SCHEMA)
+    return _by_doc(ocr_words).mapInArrow(
+        _spans_partition_arrow, schema=SPANS_TABLE_SCHEMA
     )
 
 

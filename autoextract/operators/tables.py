@@ -7,7 +7,7 @@ stage consumes.  The reference has no equivalent (its LLM reads the page
 image); the published classical approach is projection clustering:
 
   * rows: greedy y-center sweep with a vertical-overlap test (the same
-    rule ``layout.cluster_lines`` uses — a word joins the current row iff
+    rule ``layout.page_reading_order``'s line sweep uses — a word joins the current row iff
     it overlaps the row band by ≥ half the smaller height),
   * columns: merge the x-extents of ALL words in the table into maximal
     intervals; a horizontal whitespace gutter wider than

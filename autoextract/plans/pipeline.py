@@ -16,11 +16,14 @@ overwrite, then commits the checkpoint — kill + rerun converges to the clean
 result (north_rule resumability).
 
 Scale notes:
-  * the only wide operations are the layout groupBy(doc_id,page), the global
-    offset window and the final write repartition — all keyed on doc_id, so
-    AQE + range partitioning keep them balanced;
-  * mega-document skew is defused structurally: layout parallelizes per page,
-    and bucket counts are configurable so one bucket ≈ one comfortable task.
+  * layout is one hash ``repartition(doc_id)`` + sort, then one Arrow pass
+    over complete documents that assigns reading order and global offsets
+    in-pass (no per-page groupBy, no offset window); the other wide
+    operations are ``assemble_spans``' groupBy(doc_id) and the final write
+    repartition on bucket;
+  * a document is one task's unit, bounded by the ingest page cap; bucket
+    counts are configurable so one bucket ≈ one comfortable task. Corpora
+    with unbounded single documents use ``layout.order_words_paged``.
 """
 
 from __future__ import annotations

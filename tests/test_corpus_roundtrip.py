@@ -94,8 +94,9 @@ def test_idempotence(spark, gen, got_spans):
 
 
 def test_mega_doc_present_and_correct(spark, gen, got_spans):
-    """The skew fixture (~100× median words) flows through the page-parallel
-    layout path and still satisfies the invariant."""
+    """The skew fixture (~100× median words) flows through the single-pass
+    ``order_words`` kernel as one task's document and still satisfies the
+    invariant."""
     sizes = got_spans.select("doc_id", F.size("spans").alias("n"))
     mx = sizes.orderBy(F.desc("n")).first()
     med = sizes.approxQuantile("n", [0.5], 0.0)[0]

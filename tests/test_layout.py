@@ -1,4 +1,4 @@
-"""Layout engine: pure-NumPy units + Spark fixture goldens (SURVEY.md §2 P4/P5/W1/W3)."""
+"""Layout engine: pure page-algorithm units + Spark fixture goldens (SURVEY.md §2 P4/P5/W1/W3)."""
 
 from __future__ import annotations
 
@@ -13,39 +13,32 @@ def _boxes(rows):
 
 
 class TestPureGeometry:
-    def test_boxes_from_points(self):
-        pts = np.array([[[50, 120], [250, 120], [250, 150], [50, 150]]], dtype=float)
-        b = layout.boxes_from_points(pts)
-        assert b.tolist() == [[50.0, 120.0, 250.0, 150.0]]
-
-    def test_projection_gaps(self):
-        lo = np.array([0.0, 100.0])
-        hi = np.array([30.0, 130.0])
-        assert layout._projection_gaps(lo, hi, 50.0) == [65.0]
-        assert layout._projection_gaps(lo, hi, 80.0) == []
-
     def test_xy_cut_two_columns(self):
-        # two columns, tall enough to allow the x-cut
-        left = [[0, y, 80, y + 10] for y in range(0, 100, 20)]
-        right = [[200, y, 280, y + 10] for y in range(0, 100, 20)]
-        b = _boxes(left + right)
-        blocks = layout.xy_cut(b, y_gap=15.0, x_gap=50.0, min_x_extent=20.0)
-        assert len(blocks) == 2
-        assert sorted(blocks[0].tolist()) == list(range(5))  # left first
-        assert sorted(blocks[1].tolist()) == list(range(5, 10))
+        # two line-spaced columns, tall enough to allow the x-cut
+        left = [[0, y, 80, y + 10] for y in range(0, 70, 14)]
+        right = [[200, y, 280, y + 10] for y in range(0, 70, 14)]
+        perm, block_id, line_id = layout.page_reading_order(_boxes(left + right))
+        assert block_id.tolist() == [0] * 5 + [1] * 5  # left first
+        assert perm.tolist() == list(range(10))
+        assert line_id.tolist() == list(range(5)) * 2
 
     def test_xy_cut_never_splits_single_line(self):
         # three words on one line with wide gaps — must stay one block
         b = _boxes([[0, 0, 50, 30], [150, 0, 200, 30], [300, 0, 350, 30]])
-        blocks = layout.xy_cut(b, y_gap=21.0, x_gap=60.0, min_x_extent=60.0)
-        assert len(blocks) == 1
+        perm, block_id, line_id = layout.page_reading_order(b)
+        assert block_id.tolist() == [0, 0, 0]
+        assert line_id.tolist() == [0, 0, 0]
+        assert perm.tolist() == [0, 1, 2]
 
     def test_cluster_lines(self):
         b = _boxes(
             [[0, 0, 10, 10], [20, 1, 30, 11], [0, 40, 10, 50], [20, 41, 30, 51]]
         )
-        ids = layout.cluster_lines(b)
-        assert ids.tolist() == [0, 0, 1, 1]
+        _, block_id, line_id = layout.page_reading_order(b)
+        # a visual line is a (block, line) pair
+        assert list(zip(block_id.tolist(), line_id.tolist())) == [
+            (0, 0), (0, 0), (1, 0), (1, 0)
+        ]
 
     def test_reading_order_deterministic_under_permutation(self):
         rng = np.random.RandomState(3)
@@ -63,7 +56,70 @@ class TestPureGeometry:
         assert [tuple(b[shuffle][i]) for i in perm1] == [tuple(b[i]) for i in perm0]
 
 
+def _digest_pages():
+    """Seeded pages: grid, two-column, scatter and duplicate-box (tie)
+    layouts of 1–300 words, plus five 5k–10k-word pages."""
+    rng = np.random.RandomState(20261018)
+
+    def grid(n, x_off=0.0):
+        cols = rng.randint(1, 8)
+        w, h = rng.uniform(30, 90), rng.uniform(8, 20)
+        i = np.arange(n)
+        x0 = x_off + (i % cols) * (w + rng.uniform(5, 40)) + rng.uniform(0, 3, n)
+        y0 = (i // cols) * (h + rng.uniform(2, 30)) + rng.uniform(0, 3, n)
+        return np.stack([x0, y0, x0 + w, y0 + h], axis=1)
+
+    def two_column(n):
+        left = grid((n + 1) // 2)
+        right = grid(n // 2, x_off=left[:, 2].max() + rng.uniform(60, 200))
+        return np.concatenate([left, right])
+
+    def scatter(n):
+        x0, y0 = rng.uniform(0, 1000, n), rng.uniform(0, 1400, n)
+        return np.stack(
+            [x0, y0, x0 + rng.uniform(10, 80, n), y0 + rng.uniform(8, 30, n)], axis=1
+        )
+
+    def duplicates(n):
+        base = grid(max(1, n // 4))
+        return base[rng.randint(0, len(base), n)]
+
+    pages = []
+    for make in (grid, two_column, scatter, duplicates):
+        for n in rng.randint(1, 301, 40):
+            pages.append(make(n))
+    pages += [grid(6000), two_column(8000), scatter(5000), duplicates(10000),
+              grid(4097)]
+    for boxes in pages:
+        n = len(boxes)
+        tb = rng.permutation(n) if rng.rand() < 0.5 else np.arange(n)
+        yield boxes, tb
+
+
+def test_page_reading_order_digest():
+    """Bit-identity pin over ``(perm, block_id, line_id)``: the digest was
+    computed with the former two-path kernel (pure Python up to 4,096
+    words, NumPy XY-cut above), so any change in output fails here."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for boxes, tb in _digest_pages():
+        for arr in layout.page_reading_order(boxes, tiebreak=tb):
+            h.update(np.asarray(arr, dtype="<i8").tobytes())
+    assert h.hexdigest() == "8e51e4eeb13d78f60c369b4471f402d893fc6d7ddf01e591db02f1ccd70bc0a1"
+
+
 class TestSparkLayout:
+    def test_boxes_from_points(self, spark):
+        """Corner quads fold to [x0, y0, x1, y1] JVM-side in ``_clean``."""
+        df = spark.createDataFrame(
+            [("d", 1, 0, "w", [[50.0, 120.0], [250.0, 120.0], [250.0, 150.0], [50.0, 150.0]])],
+            "doc_id string, page int, word_seq int, content string, "
+            "points array<array<double>>",
+        )
+        r = layout._clean(df).collect()[0]
+        assert [r["x0"], r["y0"], r["x1"], r["y1"]] == [50.0, 120.0, 250.0, 150.0]
+
     def test_two_column_fixture(self, spark):
         from autoextract.operators.layout import assemble_spans, order_words
 

@@ -16,6 +16,7 @@ import zlib
 import numpy as np
 import pytest
 
+from autoextract.operators.layout import spans_table
 from autoextract.sources.pdf import (
     encrypt_pdf,
     make_text_pdf,
@@ -140,7 +141,21 @@ def _mutations() -> list[tuple[str, bytes]]:
                  media + b"\n1 0 obj\n<< /Type /Catalog >>\nendobj\n" * 5))
     muts.append(("recursive_contents",
                  re.sub(rb"/Contents (\d+) 0 R", rb"/Contents [\1 0 R \1 0 R]", plain)))
+
+    # one Td y-operand overflows to ±inf (a 400-digit number, /Length kept
+    # consistent so the parser still emits the word): the word must stay a
+    # span instead of failing the layout task
+    for name, big in (("inf_y_coordinate", b"-" + b"9" * 400),
+                      ("neg_inf_y_coordinate", b"9" * 400)):
+        m = plain.replace(b"50 720 Td", b"50 " + big + b" Td", 1)
+        muts.append((name, re.sub(
+            rb"/Length (\d+)",
+            lambda g: b"/Length %d" % (int(g.group(1)) + len(big) - 3), m, count=1,
+        )))
     return muts
+
+
+_NON_FINITE = ("inf_y_coordinate", "neg_inf_y_coordinate")
 
 
 def test_fuzz_pure_python_containment():
@@ -169,6 +184,14 @@ def test_fuzz_tables_contained(spark):
     assert {r["doc_id"] for r in words} <= set(meta)
     media_rows = pdf_media_table(pdfs).collect()
     assert {r["doc_id"] for r in media_rows} <= set(meta)
+    # the layout kernel takes every parsed word, however hostile its box
+    spans = {r["doc_id"]: r["spans"] for r in spans_table(pdf_words_table(pdfs)).collect()}
+    assert set(spans) <= set(meta)
+    for name in _NON_FINITE:
+        assert [s["offset"] for s in spans[name]] == [0, 1, 2], name
+        assert sorted(s["text"] or s["media_ref"] for s in spans[name]) == [
+            "alpha", "beta", f"pdf:{name}:0"
+        ]
     # sanity: the fuzzer is not vacuous — some mutants still parse (e.g.
     # no_xref: the scanner never consults xref), some are rejected
     assert any(m["valid"] for m in meta.values())

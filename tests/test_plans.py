@@ -46,16 +46,16 @@ def test_anti_join_strategy(spark):
 
 def test_span_pipeline_exchange_budget(spark):
     """order_words + assemble_spans = exactly 2 exchanges (the doc_id
-    repartition and the final groupBy) — no window sort, no extra shuffle.
-    A third exchange appearing means someone broke the single-pass design."""
+    repartition, which the source re-spread already satisfies, and the
+    final groupBy) — no window sort, no extra shuffle. A third exchange
+    appearing means someone broke the single-pass design."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     from autoextract.operators.layout import assemble_spans, order_words
 
     spans = assemble_spans(order_words(E._docs_to_word_boxes(docs)))
     p = plan_str(spans, "simple")
-    # repartition-by-id counts once even under AQE re-plan markers
     n_exchanges = p.count("Exchange")
-    assert n_exchanges <= 3, f"{n_exchanges} exchanges:\n{p}"
+    assert n_exchanges == 2, f"{n_exchanges} exchanges:\n{p}"
     assert "Window" not in p
 
 
@@ -101,7 +101,9 @@ def test_fused_spans_single_exchange(spark):
     from autoextract.operators.layout import spans_table
 
     p = plan_str(spans_table(E._docs_to_word_boxes(docs)), "simple")
-    assert p.count("Exchange") <= 2  # doc repartition + source re-spread
+    # the source re-spread's hashpartitioning(doc_id, n) satisfies the doc
+    # repartition, so word rows never cross an exchange
+    assert p.count("Exchange") == 1, p
     assert "HashAggregate" not in p and "ObjectHashAggregate" not in p
     assert "Window" not in p
 
